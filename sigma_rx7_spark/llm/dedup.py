@@ -24,41 +24,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caches import _persist_tracked
 from ..functions.text import tokens
 from ..io import load
 from ..registry import query
 from .similarity import (dot, dot_idx, normalized,
                          np_pairwise_dots, np_unit_rows)
-
-# Scoped persist registry (r16, ADVICE r15): every relation this module
-# persists is registered so a library consumer running dedup queries
-# over many distinct corpora can release them; mirrors graph.py's
-# _GRAPH_CACHES pattern. CacheManager dedupes by logical plan, so
-# repeat calls on ONE corpus still reuse a single entry (the r5
-# unpersist lesson stands: do NOT release between repeat probes).
-_DEDUP_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register for release_dedup_caches()."""
-    _DEDUP_CACHES.append(df)
-    return df.persist()
-
-
-def release_dedup_caches() -> int:
-    """Unpersist every relation THIS MODULE persisted; return the
-    count. unpersist() on an evicted entry is a no-op — double release
-    is safe."""
-    n = 0
-    while _DEDUP_CACHES:
-        df = _DEDUP_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped: nothing left to release
-    return n
-
 
 MINHASH_K = 32          # signature length
 LSH_BANDS = 8           # bands of 4 rows each -> catches jaccard >~ 0.5

@@ -1713,9 +1713,91 @@ def q_agg_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---- Exact distributed median (binned two-pass, no global sort) ----------
+# ---- Exact per-group rank without a global sort (binned two-pass) --------
 
-MEDIAN_BINS = 1024
+# Speed only: ranks are exact for any bin count. 256 beat 1024 on the
+# median warm time of 5 of the 6 callers (sf0.1, 4 cores, 3 pairs).
+RANK_BINS = 256
+
+
+def binned_ranks(df: DataFrame, keys: list[str], value: str,
+                 ranks: list[Column] | None = None,
+                 tiebreak: str | None = None) -> DataFrame:
+    """Exact rank of every ``df`` row within its ``keys`` group, ordered
+    by ``value`` ascending (then ``tiebreak``), with no global sort —
+    the one kernel behind the exact median, quantile, trimmed-mean,
+    VaR, IQR and NTILE queries:
+
+    1. one aggregate gives each group its (n, min, max);
+    2. each row falls in one of ``RANK_BINS`` equal-width range bins
+       (a constant group is all bin 0); the bin is monotone in
+       ``value``, so every row of a bin ranks below every row of the
+       next one;
+    3. a (group, bin) histogram plus a window over it — at most
+       groups x bins rows — gives each bin the count of rows before it;
+    4. ``row_number`` within one (group, bin) partition plus that count
+       is the row's exact rank ``rk`` in its group (1..n).
+
+    ``ranks`` are target-rank expressions over the group size ``n``.
+    With them, only the bins holding a target are ranked and the result
+    is the row at each target: ``df``'s columns plus ``n`` and ``t``,
+    the target's index in ``ranks``, one row per (group, target).
+    Without them, every bin is ranked and every row comes back with
+    ``n`` and ``rk``.
+
+    The bin count only sets speed; the ranks are exact for any count.
+    Skew: ties pile into one bin, so a tie block is ranked by one task —
+    the block a global sort would serialize too.
+
+    Materialization: the per-group stats and the bin offsets are small
+    (groups and groups x bins rows) and each feeds more than one
+    consumer; without a materialization point every consumer
+    re-derives its fact-scan subtree (5-6 scans in one plan for this
+    3-scan recipe). With both materialized, the rank pass is the only
+    fact scan left in the output's plan, so a caller that broadcasts
+    the (groups x targets)-row output into a further pass needs no
+    checkpoint of its own. localCheckpoint gives each a fresh lineage
+    per call, so repeated calls recompute rather than read a cache.
+    Lazy, not eager: an eager checkpoint schedules its jobs before the
+    query's own, while a lazy one is filled by the first job that reads
+    it. In an interleaved A/B of the six callers (sf0.1, 4 cores, 4
+    process pairs) lazy had the lower median warm time for all six."""
+    stats = df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(value).alias("_lo"), F.max(value).alias("_hi"))
+    stats = stats.localCheckpoint(eager=False)
+    span = F.col("_hi") - F.col("_lo")
+    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
+        F.floor((F.col(value) - F.col("_lo")) * RANK_BINS / span),
+        F.lit(RANK_BINS - 1))).cast("int")
+    binned = df.join(F.broadcast(stats), keys).select(
+        *df.columns, "n", bin_of.alias("_bin"))
+    before = (Window.partitionBy(*keys).orderBy("_bin")
+              .rowsBetween(Window.unboundedPreceding, -1))
+    bins = (binned.groupBy(*keys, "_bin")
+            .agg(F.count(F.lit(1)).alias("_cnt"))
+            .select(*keys, "_bin", "_cnt",
+                    F.coalesce(F.sum("_cnt").over(before), F.lit(0))
+                    .alias("_off")))
+    if ranks is not None:
+        targets = stats.select(*keys, F.posexplode(F.array(
+            *[r.cast("bigint") for r in ranks])).alias("t", "rk"))
+        b, t = bins.alias("_b"), F.broadcast(targets.alias("_t"))
+        bins = b.join(t, [
+            *[F.col(f"_b.{k}") == F.col(f"_t.{k}") for k in keys],
+            F.col("_t.rk") > F.col("_b._off"),
+            F.col("_t.rk") <= F.col("_b._off") + F.col("_b._cnt")],
+            "left_semi")
+    bins = bins.localCheckpoint(eager=False)
+    order = [value] if tiebreak is None else [value, tiebreak]
+    in_bin = Window.partitionBy(*keys, "_bin").orderBy(*order)
+    ranked = binned.join(F.broadcast(bins), [*keys, "_bin"]).select(
+        *df.columns, "n",
+        (F.col("_off") + F.row_number().over(in_bin)).alias("rk"))
+    if ranks is None:
+        return ranked
+    return ranked.join(F.broadcast(targets), [*keys, "rk"]) \
+        .select(*df.columns, "n", "t")
 
 
 @query(
@@ -1737,67 +1819,18 @@ MEDIAN_BINS = 1024
 def q_agg_exact_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT grouped median without a global sort — the 100 TB quantile
     recipe (sketches like q_agg_approx_quantile trade exactness for one
-    pass; this keeps exactness and pays two):
-
-    1. one aggregate for per-group (n, min, max);
-    2. one aggregate for a {MEDIAN_BINS}-bin histogram; a window over
-       the BIN relation (<= groups x bins rows, tiny) locates the bin
-       holding the target rank and the residual offset inside it;
-    3. a second scan keeps ONLY rows in each group's target bin
-       (~n/bins rows), ranks them per group, and picks the offset row.
-
-    Nothing ever sorts more than one bin's worth of a group, and every
-    shuffle is either histogram-sized or bin-sized. The oracle global-
-    sorts in DuckDB (fine at oracle scale) for the same lower-median
-    definition: the value at rank (n+1)//2. Ties are harmless: rank
-    permutations among equal values select the same VALUE, and only the
-    value is emitted."""
+    pass; this keeps exactness and pays two): ``binned_ranks`` picks
+    the row at rank (n+1)//2 of each group, the lower-median definition
+    the oracle states as a global-sort ROW_NUMBER. Ties are harmless:
+    rank permutations among equal values select the same VALUE, and
+    only the value is emitted."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice")
-    stats = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_extendedprice").alias("v_lo"),
-        F.max("l_extendedprice").alias("v_hi"))
-    # localCheckpoint the two tiny relations (r15, guide §1.2 step 1):
-    # stats (<= |groups| rows) feeds both binned references and the
-    # rank targets, and target (<= |groups| rows) re-embedded the whole
-    # binned subtree at the final join — 5 fact scans in one plan for a
-    # 3-pass algorithm. Materialized, the plan takes exactly the three
-    # passes the recipe needs (stats, histogram, bin-pick). Fresh
-    # lineage per call keeps bench reps recomputing honestly.
-    stats = stats.localCheckpoint(eager=True)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("l_extendedprice") - F.col("v_lo"))
-                * MEDIAN_BINS / span),
-        F.lit(MEDIAN_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "l_returnflag") \
-        .select("l_returnflag", "l_extendedprice", bin_of.alias("bin"))
-    hist = binned.groupBy("l_returnflag", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("l_returnflag").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    target = (
-        hist.join(F.broadcast(stats.select(
-            "l_returnflag", ((F.col("n") + 1) / 2).cast("bigint")
-            .alias("rk"), "n")), "l_returnflag")
-        .withColumn("cum", F.sum("cnt").over(wcum))
-        .where((F.col("cum") >= F.col("rk"))
-               & (F.col("cum") - F.col("cnt") < F.col("rk")))
-        .select("l_returnflag", "bin",
-                (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                .alias("offset"), "n")
-    )
-    target = target.localCheckpoint(eager=True)
-    wbin = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
-    return (
-        binned.join(F.broadcast(target), ["l_returnflag", "bin"])
-        .withColumn("rk_in_bin", F.row_number().over(wbin))
-        .where(F.col("rk_in_bin") == F.col("offset"))
-        .select("l_returnflag",
-                F.col("l_extendedprice").alias("median_price"),
-                F.col("n").cast("bigint").alias("n_rows"))
-    )
+    mid = binned_ranks(li, ["l_returnflag"], "l_extendedprice",
+                       [F.expr("(n + 1) div 2")])
+    return mid.select("l_returnflag",
+                      F.col("l_extendedprice").alias("median_price"),
+                      F.col("n").cast("bigint").alias("n_rows"))
 
 
 # ---- Mergeable aggregate states (incremental rollup primitive) -----------
@@ -1917,68 +1950,22 @@ QUANTILE_PS = (0.5, 0.95, 0.99)
 )
 def q_agg_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT grouped p50/p95/p99 in two passes, no global sort — the
-    scalable exact answer to the question A12's sketches approximate
-    (and A27's single-median recipe generalized to a quantile VECTOR
-    for one extra histogram-relation window, not one extra scan per
-    quantile): all three target ranks (rank = CEIL(p·n), the discrete
-    inverse-CDF definition — both engines evaluate the identical IEEE
-    expression, so even a 0.95·n landing microscopically above an
-    integer agrees) locate their bins in the SAME {MEDIAN_BINS}-bin
-    histogram; the second scan keeps only rows in any group's target
-    bins and ranks once per (group, quantile). Shuffle volume: one
-    histogram, then ~3·n/bins rows."""
+    scalable exact answer to the question A12's sketches approximate:
+    ``binned_ranks`` with one target per quantile, rank = CEIL(p·n)
+    (the discrete inverse-CDF definition; both engines evaluate the
+    identical IEEE expression, so even a 0.95·n landing microscopically
+    above an integer agrees). All targets share one histogram, so a
+    quantile vector costs what one median costs."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_extendedprice")
-    stats = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("l_extendedprice").alias("v_lo"),
-        F.max("l_extendedprice").alias("v_hi"))
-    # Same materialization discipline as A27 above: stats and located
-    # are group-cardinality-bounded but each re-embedded a fact-scan
-    # subtree per consumer (5 scans in-plan for the 3-pass recipe).
-    stats = stats.localCheckpoint(eager=True)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("l_extendedprice") - F.col("v_lo"))
-                * MEDIAN_BINS / span),
-        F.lit(MEDIAN_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "l_returnflag") \
-        .select("l_returnflag", "l_extendedprice", bin_of.alias("bin"))
-    hist = binned.groupBy("l_returnflag", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    targets = (
-        stats.select(
-            "l_returnflag", "n",
-            F.explode(F.array(*[F.lit(p) for p in QUANTILE_PS]))
-            .alias("p"))
-        .select("l_returnflag", "p", "n",
-                F.ceil(F.col("p") * F.col("n")).cast("bigint").alias("rk"))
-    )
-    wcum = Window.partitionBy("l_returnflag").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (
-        hist.withColumn("cum", F.sum("cnt").over(wcum))
-        .join(F.broadcast(targets), "l_returnflag")
-        .where((F.col("cum") >= F.col("rk"))
-               & (F.col("cum") - F.col("cnt") < F.col("rk")))
-        .select("l_returnflag", "p", "bin", "n",
-                (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                .alias("offset"))
-    )
-    located = located.localCheckpoint(eager=True)
-    wbin = Window.partitionBy("l_returnflag", "p") \
-        .orderBy("l_extendedprice")
-    hits = (
-        binned.join(F.broadcast(located), ["l_returnflag", "bin"])
-        .withColumn("rk_in_bin", F.row_number().over(wbin))
-        .where(F.col("rk_in_bin") == F.col("offset"))
-    )
+    hits = binned_ranks(li, ["l_returnflag"], "l_extendedprice",
+                        [F.ceil(F.lit(p) * F.col("n"))
+                         for p in QUANTILE_PS])
     return (
         hits.groupBy("l_returnflag")
-        .agg(*[F.max(F.when(F.col("p") == F.lit(p),
-                            F.col("l_extendedprice")))
+        .agg(*[F.max(F.when(F.col("t") == i, F.col("l_extendedprice")))
                .alias(f"p{str(p)[2:]}" if p != 0.5 else "p50")
-               for p in QUANTILE_PS],
+               for i, p in enumerate(QUANTILE_PS)],
              F.max("n").cast("bigint").alias("n_rows"))
     )
 
@@ -5276,7 +5263,6 @@ def q_ab_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- Exact trimmed mean (A69) --------------------------------------------------
 
 TRIM_DEN = 10   # trim floor(n/10) rows from each tail (10%)
-TRIM_BINS = 256
 
 
 @query(
@@ -5307,14 +5293,14 @@ TRIM_BINS = 256
 def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 10%-TRIMMED MEAN per return-flag group — the robust-center
     statistic between A36's median and the raw mean (drop the
-    floor(n/10) smallest and largest values, average the rest), and
-    the A27/A30 binning recipe EXTENDED from rank lookup to a trimmed
-    AGGREGATE: interior bins (entirely inside the kept rank range)
-    contribute their pre-aggregated (count, Σx) WITHOUT any per-row
-    ranking; only the two boundary-straddling bins rank their own rows
-    (window per (group, bin) partition — parallel, bounded by ~n/bins
-    rows). Nothing ever globally sorts: the 100 TB trimmed mean costs
-    two scans plus two bin-local sorts.
+    floor(n/10) smallest and largest values, average the rest), with
+    no global sort: ``binned_ranks`` picks the two kept end values
+    a (rank k+1) and b (rank n-k), and one more fact aggregate sums
+    the rows strictly between them and counts the copies of a and b
+    inside the kept rank range. With L(v) / E(v) the count of rows
+    below / at most v, the kept copies are E(a) − k of a and
+    n − k − L(b) of b when a < b, and all n − 2k kept rows equal a
+    when a = b.
 
     Ties at a trim boundary are harmless: any rank permutation among
     equal values keeps the same multiset, so the sum is identical.
@@ -5323,72 +5309,28 @@ def q_agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
         F.col("l_extendedprice").alias("x"))
-    # localCheckpoint the two tiny relations (r15, guide §1.2 step 1 /
-    # §3.3 "materialise an intermediate to truncate the plan"): stats
-    # (<= |groups| rows) and spans (<= |groups|*bins rows) each feed
-    # multiple consumers; without a materialization point every
-    # broadcast(stats)/spans reference re-derived the whole fact-scan
-    # subtree (14 parquet hits in one plan) and the duplicated tree
-    # made query construction itself cost more than execution.
-    # localCheckpoint, not persist: fresh lineage per call keeps bench
-    # reps recomputing honestly. Values are bit-identical — the same
-    # aggregates, just computed once.
-    #
-    # LAZY, not eager (r16 — the VERDICT item 5 adjudication REPRODUCED
-    # this query's driver regression: alternating cold-process mins
-    # 1.40-1.45 HEAD vs 1.09-1.18 r14): eager=True paid two extra
-    # scheduled jobs before the main one. eager=False keeps the
-    # single-derivation truncation (both variants return a LogicalRDD;
-    # consumers share ONE RDD materialized inside the first consuming
-    # job) without the job-scheduling cost. Same-session A/B over 3
-    # rounds: eager/eager 1.49-1.82, lazy/lazy 1.20-1.39, no-checkpoint
-    # (r14 shape) 1.42-1.67 — lazy wins every round, rows identical.
-    stats = li.groupBy("g").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("lo"), F.max("x").alias("hi"))
-    stats = stats.localCheckpoint(eager=False)
-    span = F.col("hi") - F.col("lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("x") - F.col("lo")) * TRIM_BINS / span),
-        F.lit(TRIM_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "g").select(
-        "g", "x", "n", bin_of.alias("bin"))
-    hist = binned.groupBy("g", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"),
-        F.sum(F.col("x").cast("decimal(20,6)")).alias("s"),
-        F.max("n").alias("n"))
-    wcum = (Window.partitionBy("g").orderBy("bin")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    spans = hist.select(
-        "g", "bin", "cnt", "s", "n",
-        F.coalesce(F.sum("cnt").over(wcum), F.lit(0)).alias("off"),
-        F.expr(f"n div {TRIM_DEN}").alias("k"))
-    spans = spans.localCheckpoint(eager=False)
-    lo_keep, hi_keep = F.col("k") + 1, F.col("n") - F.col("k")
-    start, end = F.col("off") + 1, F.col("off") + F.col("cnt")
-    interior = spans.where((start >= lo_keep) & (end <= hi_keep)) \
-        .select("g", "s", F.col("cnt").alias("m"))
-    boundary_bins = spans.where(
-        ~((start >= lo_keep) & (end <= hi_keep))
-        & (end >= lo_keep) & (start <= hi_keep)) \
-        .select("g", "bin", "off", "k", F.col("n").alias("nb"))
-    wbin = Window.partitionBy("g", "bin").orderBy("x")
-    brows = (binned.join(F.broadcast(boundary_bins), ["g", "bin"])
-             .withColumn("rk", F.col("off") + F.row_number().over(wbin))
-             .where((F.col("rk") > F.col("k"))
-                    & (F.col("rk") <= F.col("nb") - F.col("k")))
-             .groupBy("g").agg(
-                 F.sum(F.col("x").cast("decimal(20,6)")).alias("s"),
-                 F.count(F.lit(1)).alias("m")))
-    parts = interior.unionByName(brows)
-    agg = parts.groupBy("g").agg(
-        F.sum("s").alias("total"), F.sum("m").alias("kept"))
-    out = agg.join(F.broadcast(stats.select("g", "n")), "g")
-    return out.select(
+    k = F.expr(f"n div {TRIM_DEN}")
+    ends = (binned_ranks(li, ["g"], "x", [k + 1, F.col("n") - k])
+            .groupBy("g")
+            .agg(F.max("n").alias("n"),
+                 F.max(F.when(F.col("t") == 0, F.col("x"))).alias("a"),
+                 F.max(F.when(F.col("t") == 1, F.col("x"))).alias("b")))
+    x, a, b = F.col("x"), F.col("a"), F.col("b")
+    agg = li.join(F.broadcast(ends), "g").groupBy("g", "n", "a", "b").agg(
+        F.sum(F.when((x > a) & (x < b), x.cast("decimal(20,6)")))
+        .alias("mid"),
+        F.count(F.when(x <= a, 1)).alias("le_a"),
+        F.count(F.when(x < b, 1)).alias("lt_b"))
+    kept = F.col("n") - 2 * k
+    total = F.when(a == b, a.cast("decimal(20,6)") * kept).otherwise(
+        F.coalesce(F.col("mid"), F.lit(0))
+        + a.cast("decimal(20,6)") * (F.col("le_a") - k)
+        + b.cast("decimal(20,6)") * (F.col("n") - k - F.col("lt_b")))
+    return agg.select(
         F.col("g").alias("l_returnflag"),
         F.col("n").cast("bigint").alias("n_rows"),
-        F.col("kept").cast("bigint").alias("n_kept"),
-        (F.col("total").cast("double") / F.col("kept"))
+        kept.cast("bigint").alias("n_kept"),
+        (total.cast("double") / kept)
         .cast("decimal(18,6)").cast("double").alias("trimmed_mean"))
 
 
@@ -6343,62 +6285,19 @@ def q_agg_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
     entered; quantile alone under-states a heavy tail, which is CVaR's
     whole reason to exist as the coherent risk measure).
 
-    Exactness at scale: the percentile comes from the A27/A30 two-pass
-    binning (one {{IQR_BINS}}-bin histogram per segment, rank-in-bin
-    selection on only the target bin's rows — no global sort); the
-    rank compare rk·{CVAR_P_DEN} ≥ {CVAR_P_NUM}·n stays in integer
-    arithmetic (no float quantile index). The tail mean is a second
-    fact aggregate against the broadcast 3-row VaR relation with the
-    standing decimal-sum discipline."""
-    from .quality import IQR_BINS
-
+    Exactness at scale: ``binned_ranks`` picks the VaR row with no
+    global sort, at rank ceil(n·NUM/DEN) computed as
+    (n·NUM + DEN − 1) div DEN — pure bigint arithmetic, like the
+    oracle's rk·DEN ≥ NUM·n compare (a float quantile index could
+    round across an integer boundary for other constants). The tail
+    mean is a second fact aggregate against the broadcast per-segment
+    VaR relation with the standing decimal-sum discipline."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("segment"),
         F.col("l_extendedprice").alias("v"))
-    stats = li.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"))
-    # A27/A30 materialization discipline (r15, guide §1.2 step 1):
-    # stats, located and the 3-row VaR relation each fed multiple
-    # consumers and re-embedded fact-scan subtrees (6 scans in one
-    # plan for a 4-pass algorithm: stats, histogram, rank-in-bin pick,
-    # tail aggregate). Checkpointed, the plan takes exactly those four
-    # passes.
-    stats = stats.localCheckpoint(eager=True)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
-        F.lit(IQR_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "segment") \
-        .select("segment", "v", bin_of.alias("bin"))
-    # rank = ceil(n·NUM/DEN) computed as (n·NUM + DEN − 1) div DEN —
-    # PURE bigint arithmetic (ADVICE r13: F.ceil over `/` goes through
-    # double division, exact for 95/100 today but fragile if the
-    # quantile constants change to a ratio that rounds across an
-    # integer boundary; the oracle's rk·DEN ≥ NUM·n compare is integer,
-    # so the engine side must be too)
-    targets = stats.select(
-        "segment", "n",
-        F.expr(f"CAST((n * {CVAR_P_NUM} + {CVAR_P_DEN - 1}) "
-               f"DIV {CVAR_P_DEN} AS BIGINT)").alias("rk"))
-    hist = binned.groupBy("segment", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("segment").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-               .join(F.broadcast(targets), "segment")
-               .where((F.col("cum") >= F.col("rk"))
-                      & (F.col("cum") - F.col("cnt") < F.col("rk")))
-               .select("segment", "bin", "n",
-                       (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                       .alias("offset")))
-    located = located.localCheckpoint(eager=True)
-    wbin = Window.partitionBy("segment").orderBy("v")
-    var_rel = (binned.join(F.broadcast(located), ["segment", "bin"])
-               .withColumn("rk_in_bin", F.row_number().over(wbin))
-               .where(F.col("rk_in_bin") == F.col("offset"))
-               .select("segment", "n", F.col("v").alias("var_p")))
-    var_rel = var_rel.localCheckpoint(eager=True)
+    var_rel = binned_ranks(li, ["segment"], "v", [F.expr(
+        f"(n * {CVAR_P_NUM} + {CVAR_P_DEN - 1}) DIV {CVAR_P_DEN}")]) \
+        .select("segment", "n", F.col("v").alias("var_p"))
     return (li.join(F.broadcast(var_rel), "segment")
             .where(F.col("v") >= F.col("var_p"))
             .groupBy("segment")
@@ -6407,5 +6306,4 @@ def q_agg_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.count(F.lit(1)).cast("bigint").alias("tail_n"),
                  (F.sum(F.col("v").cast("decimal(20,6)")).cast("double")
                   / F.count(F.lit(1))).alias("cvar95"))
-            .select("segment", "n_rows", "var95", "tail_n", "cvar95")
-            .orderBy("segment"))
+            .select("segment", "n_rows", "var95", "tail_n", "cvar95"))

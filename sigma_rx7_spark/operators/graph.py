@@ -22,53 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caches import _persist_tracked
 from ..io import load
 from ..registry import query
 
 PR_DAMPING_PCT = 85   # damping as an integer percentage (fixed-point)
 PR_ITERS = 3
 PR_SCALE = 10 ** 12   # rank mass unit: 1.0 == 10^12
-
-# Round-invariant relations this module persisted, registered so a
-# library consumer can release exactly them (r6 judge item 5). The
-# harness path deliberately keeps the entries alive across calls —
-# Spark's CacheManager keys entries by logical plan, so repeat calls
-# over the same input reuse one entry and a blanket per-call unpersist
-# was measured SLOWER (3.3 s → 5.7 s warm, commit 61e3413). But a
-# consumer iterating over many DISTINCT graphs accretes one entry set
-# per graph; release_graph_caches() frees those without the collateral
-# eviction of spark.catalog.clearCache(), which would also drop caches
-# this module never created (the LSH band relations, staged-index
-# reads, a user's own persists).
-_GRAPH_CACHES: list[DataFrame] = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    """persist() + register for release_graph_caches()."""
-    _GRAPH_CACHES.append(df)
-    return df.persist()
-
-
-def release_graph_caches() -> int:
-    """Unpersist every relation THIS MODULE persisted; return the count.
-
-    Scoped release: only DataFrames registered by _persist_tracked are
-    touched (property-tested in tests/test_properties.py — an unrelated
-    persisted relation survives a release). unpersist() on an already-
-    evicted entry is a Spark no-op, so double release is safe. Call
-    between graphs when feeding many distinct edge lists through
-    pagerank_fixedpoint / q_graph_triangles; do NOT call between
-    repeat probes of the same graph (that re-pays the build)."""
-    n = 0
-    while _GRAPH_CACHES:
-        df = _GRAPH_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass  # session already stopped: nothing left to release
-    return n
-
 
 # Per-order fan-out cap for the co-purchase edge build. TPC-H orders
 # carry <= 7 lines, so on harness data the cap is inert (results
@@ -159,7 +119,7 @@ def pagerank_fixedpoint(edges: DataFrame, damping_pct: int = PR_DAMPING_PCT,
     # the materialized edges across probes like the staged ANN index.
     # An explicit per-call unpersist was tried and REVERTED: it evicted
     # exactly that cross-call reuse (measured 3.3 s → 5.7 s warm).
-    # Consumers with many DISTINCT graphs: release_graph_caches().
+    # Consumers with many DISTINCT graphs: release_caches().
     edges = _persist_tracked(edges)
     # nodes feeds the rank seed; persist it too, or its consumers re-run
     # the union+distinct shuffle over the edge relation. The count()

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
+from .aggregates import binned_ranks
 
 
 def _violations(name: str, cond):
@@ -147,39 +148,44 @@ def q_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the profile checkpoint job) + ONE lineitem pass (the orphan
     # checkpoint job). All integer sums — bit-identical results.
     per_key = per_key.persist()
-    profile = per_key.agg(
-        F.sum("c").alias("n_rows"),
-        F.sum("v_null").alias("null_cust"),
-        F.sum("v_price").alias("nonpos_price"),
-        F.sum("v_date").alias("date_range"),
-        F.sum(F.when(F.col("c") > 1, 1).otherwise(0)).alias("n_dup_keys"),
-    ).localCheckpoint(eager=True)
+    try:
+        profile = per_key.agg(
+            F.sum("c").alias("n_rows"),
+            F.sum("v_null").alias("null_cust"),
+            F.sum("v_price").alias("nonpos_price"),
+            F.sum("v_date").alias("date_range"),
+            F.sum(F.when(F.col("c") > 1, 1).otherwise(0))
+            .alias("n_dup_keys"),
+        ).localCheckpoint(eager=True)
+        # ONE lineitem pass for ALL lineitem checks: the per-row domain
+        # profile rides the orphan join's aggregate (the join key
+        # relation — read from the per_key cache — broadcasts; the extra
+        # measure columns never shuffle), so lineitem is scanned once.
+        orphan_profile = (
+            li.select("l_orderkey", "l_quantity", "l_extendedprice",
+                      "l_discount")
+            .join(per_key.select("o_orderkey"),
+                  F.col("l_orderkey") == F.col("o_orderkey"), "left")
+            .agg(
+                F.sum(F.when(F.col("o_orderkey").isNull(), 1)
+                      .otherwise(0)).alias("n_orphans"),
+                # total + orphans, one pass
+                F.count(F.lit(1)).alias("n_rows"),
+                _violations("qty_range", (F.col("l_quantity") <= 0)
+                            | (F.col("l_quantity") > 50)),
+                _violations("neg_price", F.col("l_extendedprice") < 0),
+                _violations("discount_range", (F.col("l_discount") < 0)
+                            | (F.col("l_discount") > 1)),
+            )
+        ).localCheckpoint(eager=True)
+    finally:
+        # Both consumers below read materialized artifacts; the
+        # order-cardinality cache is no longer needed — and must not
+        # outlive a failed construction either.
+        per_key.unpersist()
     o_profile = profile.select("n_rows", "null_cust", "nonpos_price",
                                "date_range")
     dup = profile.select("n_dup_keys", "n_rows")
-    # ONE lineitem pass for ALL lineitem checks: the per-row domain
-    # profile rides the orphan join's aggregate (the join key relation —
-    # read from the per_key cache — broadcasts; the extra measure
-    # columns never shuffle), so lineitem is scanned once.
-    orphan_profile = (
-        li.select("l_orderkey", "l_quantity", "l_extendedprice",
-                  "l_discount")
-        .join(per_key.select("o_orderkey"),
-              F.col("l_orderkey") == F.col("o_orderkey"), "left")
-        .agg(
-            F.sum(F.when(F.col("o_orderkey").isNull(), 1).otherwise(0))
-            .alias("n_orphans"),
-            F.count(F.lit(1)).alias("n_rows"),  # total + orphans, one pass
-            _violations("qty_range", (F.col("l_quantity") <= 0)
-                        | (F.col("l_quantity") > 50)),
-            _violations("neg_price", F.col("l_extendedprice") < 0),
-            _violations("discount_range", (F.col("l_discount") < 0)
-                        | (F.col("l_discount") > 1)),
-        )
-    ).localCheckpoint(eager=True)
-    # Both consumers below read materialized artifacts; the
-    # order-cardinality cache is no longer needed.
-    per_key.unpersist()
     l_profile = orphan_profile.select(
         "n_rows", "qty_range", "neg_price", "discount_range")
     orphan = orphan_profile.select("n_orphans", "n_rows")
@@ -2036,7 +2042,6 @@ def q_quality_sentinels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- Tukey-fence (IQR) outlier audit (Q25) ----------------------------------
 
-IQR_BINS = 1024  # histogram width for the two-pass exact quartiles
 IQR_K_NUM = 3    # fence multiplier 1.5 as the exact rational 3/2 —
 IQR_K_DEN = 2    # the fence compare is then exact decimal arithmetic
 
@@ -2094,66 +2099,29 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.5·IQR is the boxplot-whisker convention every data-quality
     dashboard draws.
 
-    Exactness at scale: the quartiles come from the A27/A30 two-pass
-    binning — one histogram aggregate over {IQR_BINS} bins per
-    segment, rank-in-bin selection on only the target bins' rows — and
-    the fence comparison is EXACT decimal arithmetic with NO division
-    anywhere (1.5 as the rational 3/2 cross-multiplied: v is low iff
-    2·(q1−v) > 3·(q3−q1), identically in the oracle SQL, so neither
-    engine ever materializes a float fence — DuckDB types decimal
+    Exactness at scale: ``binned_ranks`` picks the quartile rows with
+    no global sort, and the fence comparison is EXACT decimal
+    arithmetic with NO division anywhere (1.5 as the rational 3/2
+    cross-multiplied: v is low iff 2·(q1−v) > 3·(q3−q1), identically
+    in the oracle SQL, so neither engine ever materializes a float
+    fence — DuckDB types decimal
     division as DOUBLE, which the divide-free form sidesteps). The
     outlier count is a second fact-table aggregate against the
-    broadcast 3-row fence relation; no global sort anywhere (the
-    oracle's ROW_NUMBER statement of the same ranks is the naive
-    form)."""
+    broadcast per-segment fence relation (the oracle's ROW_NUMBER
+    statement of the same ranks is the naive form)."""
     li = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("segment"),
         F.col("l_extendedprice").alias("v"))
-    stats = li.groupBy("segment").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("v").alias("v_lo"), F.max("v").alias("v_hi"))
-    # A27/A30 materialization discipline (r15, guide §1.2 step 1):
-    # stats, located and the 3-row fence relation each fed multiple
-    # consumers, re-embedding fact-scan subtrees; checkpointed, the
-    # plan takes exactly the algorithm's four passes (stats,
-    # histogram, rank-in-bin pick, fence aggregate).
-    stats = stats.localCheckpoint(eager=True)
-    span = F.col("v_hi") - F.col("v_lo")
-    bin_of = F.when(span == 0, F.lit(0)).otherwise(F.least(
-        F.floor((F.col("v") - F.col("v_lo")) * IQR_BINS / span),
-        F.lit(IQR_BINS - 1))).cast("int")
-    binned = li.join(F.broadcast(stats), "segment") \
-        .select("segment", "v", bin_of.alias("bin"))
-    targets = (stats.select(
-        "segment", "n",
-        F.explode(F.array(F.lit(0.25), F.lit(0.75))).alias("p"))
-        .select("segment", "p", "n",
-                F.ceil(F.col("p") * F.col("n")).cast("bigint")
-                .alias("rk")))
-    hist = binned.groupBy("segment", "bin").agg(
-        F.count(F.lit(1)).alias("cnt"))
-    wcum = Window.partitionBy("segment").orderBy("bin") \
-        .rowsBetween(Window.unboundedPreceding, 0)
-    located = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-               .join(F.broadcast(targets), "segment")
-               .where((F.col("cum") >= F.col("rk"))
-                      & (F.col("cum") - F.col("cnt") < F.col("rk")))
-               .select("segment", "p", "bin", "n",
-                       (F.col("rk") - (F.col("cum") - F.col("cnt")))
-                       .alias("offset")))
-    located = located.localCheckpoint(eager=True)
-    wbin = Window.partitionBy("segment", "p").orderBy("v")
-    hits = (binned.join(F.broadcast(located), ["segment", "bin"])
-            .withColumn("rk_in_bin", F.row_number().over(wbin))
-            .where(F.col("rk_in_bin") == F.col("offset")))
+    hits = binned_ranks(li, ["segment"], "v",
+                        [F.ceil(F.lit(0.25) * F.col("n")),
+                         F.ceil(F.lit(0.75) * F.col("n"))])
     quart = hits.groupBy("segment").agg(
         F.max("n").alias("n"),
-        F.max(F.when(F.col("p") == 0.25, F.col("v"))).alias("q1"),
-        F.max(F.when(F.col("p") == 0.75, F.col("v"))).alias("q3"))
+        F.max(F.when(F.col("t") == 0, F.col("v"))).alias("q1"),
+        F.max(F.when(F.col("t") == 1, F.col("v"))).alias("q3"))
     fenced = quart.select(
         "segment", "n", "q1", "q3",
         (IQR_K_NUM * (F.col("q3") - F.col("q1"))).alias("iqr3"))
-    fenced = fenced.localCheckpoint(eager=True)
     # fence classification stays in +/-/* decimal arithmetic on BOTH
     # sides: v is low iff 2*(q1-v) > 3*(q3-q1) — the division-free form
     # of v < q1 - 1.5*IQR, so neither engine ever types a fence as a
@@ -2174,8 +2142,7 @@ def q_quality_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
                  (F.sum(F.when(is_low | is_high, 1)
                         .otherwise(0)).cast("double") / F.max("n"))
                  .cast("decimal(18,6)").cast("double")
-                 .alias("outlier_rate"))
-            .orderBy("segment"))
+                 .alias("outlier_rate")))
 
 
 # ---- Referential-integrity orphan audit (Q26) --------------------------------

@@ -19,8 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..caches import _persist_tracked
 from ..io import load
 from ..registry import query
+from .aggregates import binned_ranks
 
 
 @query(
@@ -868,71 +870,37 @@ def q_window_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- RFM customer scoring (W38) ----------------------------------------------
 
-NTILE_BINS = 256
-
 
 def binned_ntile_scores(df: DataFrame, metrics: list[tuple[str, bool]],
-                        k: int, tiebreak: str = "o_custkey",
-                        bins: int = NTILE_BINS) -> DataFrame:
+                        k: int, tiebreak: str = "o_custkey") -> DataFrame:
     """Exact NTILE(k) OVER (ORDER BY metric [DESC], tiebreak) for
-    SEVERAL metrics in ONE pipeline, with NO global sort anywhere —
-    the A27/A30 two-pass recipe applied to bucket ASSIGNMENT:
+    SEVERAL metrics in ONE pipeline, with NO global sort anywhere:
 
     1. melt the metrics to (tiebreak, which, sort_key) — descending
        metrics negate their sort key, so one ASC order serves all;
-    2. one aggregate for per-metric (n, min, max), broadcast back;
-    3. range-bin each sort key; a cumulative window over the
-       ≤ metrics·``bins``-row BIN histogram gives every bin its
-       global rank offset;
-    4. row_number only WITHIN each (which, bin) partition (parallel
-       across bins, never single-partition) + the bin offset = the
-       exact global rank rn under (metric dir, tiebreak);
-    5. closed-form NTILE from (rn, n): q = n div k, r = n mod k —
-       the first r·(q+1) ranks get bucket ceil(rn/(q+1)), the rest
-       r + ceil((rn - r·(q+1))/q). Matches NTILE() bit-for-bit
-       (equal metrics share a bin, so the tiebreak never crosses a
-       bin boundary);
-    6. pivot back to one row per ``tiebreak`` with a ``<name>_score``
-       column per metric (conditional agg, no join).
-
-    Skew note: a constant-heavy metric piles its ties into one bin —
-    the within-bin sort then carries that tie block, which is exactly
-    the skew NTILE itself would serialize globally; bins bound the
-    damage to the tie block."""
+    2. ``binned_ranks`` gives every row its exact rank rk within its
+       metric under (sort_key, tiebreak) — equal metrics share a bin,
+       so the tiebreak never crosses a bin boundary;
+    3. closed-form NTILE from (rk, n): q = n div k, r = n mod k —
+       the first r·(q+1) ranks get bucket ceil(rk/(q+1)), the rest
+       r + ceil((rk - r·(q+1))/q). Matches NTILE() bit-for-bit;
+    4. pivot back to one row per ``tiebreak`` with a ``<name>_score``
+       column per metric (conditional agg, no join)."""
     melted = df.select(tiebreak, F.explode(F.array(*[
         F.struct(F.lit(name).alias("w"),
                  (-F.col(name) if desc else F.col(name))
                  .cast("double").alias("skey"))
         for name, desc in metrics])).alias("e")) \
         .select(tiebreak, "e.w", "e.skey")
-    stats = melted.groupBy("w").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("skey").alias("lo"), F.max("skey").alias("hi"))
-    span = F.col("hi") - F.col("lo")
-    bin_ = F.when(span == 0, F.lit(0)).otherwise(
-        F.least(F.floor((F.col("skey") - F.col("lo")) * bins / span),
-                F.lit(bins - 1))).cast("int")
-    binned = melted.join(F.broadcast(stats), "w").select(
-        tiebreak, "w", "skey", "n", bin_.alias("bin"))
-    hist = binned.groupBy("w", "bin").agg(F.count(F.lit(1)).alias("cnt"))
-    wb = (Window.partitionBy("w").orderBy("bin")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    offs = hist.select(
-        "w", "bin",
-        F.coalesce(F.sum("cnt").over(wb), F.lit(0)).alias("off"))
-    wr = Window.partitionBy("w", "bin").orderBy("skey", F.asc(tiebreak))
-    ranked = (binned.join(F.broadcast(offs), ["w", "bin"])
-              .select(tiebreak, "w", "n",
-                      (F.col("off") + F.row_number().over(wr))
-                      .alias("rn")))
+    ranked = binned_ranks(melted, ["w"], "skey", tiebreak=tiebreak)
     # All-integer closed form (ceil(a/b) = (a+b-1) div b); the ELSE
     # branch's greatest(q,1) guard is unreachable when q = 0 (then
     # cut = n) but keeps the expression total.
     score = F.expr(f"""
-        CASE WHEN rn <= (n % {k}) * (n div {k} + 1)
-             THEN (rn + n div {k}) div (n div {k} + 1)
+        CASE WHEN rk <= (n % {k}) * (n div {k} + 1)
+             THEN (rk + n div {k}) div (n div {k} + 1)
              ELSE (n % {k})
-                  + (rn - (n % {k}) * (n div {k} + 1)
+                  + (rk - (n % {k}) * (n div {k} + 1)
                      + greatest(n div {k}, 1) - 1)
                     div greatest(n div {k}, 1)
         END""")
@@ -994,16 +962,10 @@ def q_window_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     NTILE() windows, hash-proving the binned recomputation is
     identity.
 
-    Scale (r10 verdict item 5 — the documented "A30 relaxation",
-    actually composed): NO metric is ever globally sorted. Each score
-    is the A27/A30 two-pass exact rank — bin by metric range
-    (broadcast min/max), cumulative bin offsets over the ≤256-row BIN
-    relation, row_number only WITHIN each (bin) partition — plus the
-    closed-form NTILE assignment from (rank, n): with q = n div k,
-    r = n mod k, bucket = ceil(rank/(q+1)) for the first r·(q+1) rows
-    else r + ceil((rank - r·(q+1))/q). The only single-partition stage
-    is the bin-histogram cumsum (bounded metadata); the customer
-    relation itself is touched by bin-keyed exchanges only."""
+    Scale: NO metric is ever globally sorted. ``binned_ntile_scores``
+    scores all three metrics through ``binned_ranks`` and the
+    closed-form NTILE assignment; the customer relation itself is
+    touched by bin-keyed exchanges only."""
     o = load(spark, sf_dir, "orders")
     horizon = o.agg(F.max(F.to_date("o_orderdate")).alias("h"))
     base = (o.crossJoin(F.broadcast(horizon))
@@ -1019,7 +981,7 @@ def q_window_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The customer-grain relation feeds the melted scorer AND the
     # final join — persist it once or the orders scan and collapse
     # re-run per consumer.
-    base = base.persist()
+    base = _persist_tracked(base)
     scores = binned_ntile_scores(
         base, [("recency_days", True), ("frequency", False),
                ("monetary", False)], 5)

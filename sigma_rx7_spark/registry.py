@@ -90,76 +90,68 @@ _LOADED = False
 #      ever report "no oracle" for them, so they must not occupy checked
 #      slots.
 _CHECK_PRIORITY: tuple[str, ...] = (
-    # Round 16 window (27 changed + 19 r5 cohort completion + 4 r6 =
-    # 50). Composition: (a) every query whose execution path changed in
-    # the r16 optimization round (results bit-identical by construction
-    # and local mirrors, but the driver should re-prove them): the
-    # quality-audit fold, the lazy-checkpoint adoptees, the Arrow/
-    # fixed-point rewrites (exact cosine, covariance, blocked Jaccard
-    # pair stage) and their composers, and the 13 streaming queries
-    # whose trailing no-data micro-batch is now skipped; (b) the 19
-    # REMAINING names of the r5 freshness cohort (rotation debt paid in
-    # full — VERDICT r15 item 8); (c) the 4 oldest r6 names fill the
-    # window.
+    # 9 changed-path queries + the 41 names with the oldest green
+    # external-check rows = 50. Every name of the previous window has a
+    # green row in CORRECTNESS_r16.json, so all of them rotate out
+    # except those whose code changed since.
     #
     # Pre-freeze discipline: before committing this list, run
     #   scripts/prefreeze_mirror.sh  (sf0.01 oracle mirror, this list)
-    # changed this round — quality-audit fold (one pass per fact table)
-    "q_quality_audit",
-    # changed this round — lazy-checkpoint adoptees
+    # exact ranks now come from the one shared binned_ranks kernel
+    "q_agg_exact_median",
+    "q_agg_exact_quantiles",
     "q_agg_trimmed_mean",
-    "q_ab_kruskal",
-    "q_agg_spearman",
-    "q_text_bpe_merges",
-    "q_text_bpe_tokenize",
-    "q_pipeline_token_budget",
-    # changed this round — Arrow/fixed-point exact rewrites + composers
-    "q_dedup_cosine",
-    "q_dedup_recall_lsh",
-    "q_embed_cov",
-    "q_embed_pca_power",
+    "q_agg_cvar",
+    "q_quality_iqr",
+    "q_window_rfm",
+    # per-key cache released in `finally`
+    "q_quality_audit",
+    # star-forest edges; NULL embeddings take the JVM fallback
     "q_dedup_clusters",
-    # changed this round — trailing no-data micro-batch skipped
-    "q_stream_hourly_distinct",
-    "q_stream_hourly_distinct_approx",
-    "q_stream_hourly_counts",
-    "q_stream_sliding_counts",
-    "q_stream_ohlc",
-    "q_stream_topk",
-    "q_stream_dedup_watermarked",
-    "q_stream_srm",
-    "q_stream_psi",
-    "q_stream_anomaly",
-    "q_stream_sessions",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_funnel",
-    "q_stream_attribution",
-    # r5-cohort completion: the remaining 19 of the 49-name debt
-    "q_cohort_retention_rate",
-    "q_daily_autocorr",
-    "q_usage_heatmap",
-    "q_daily_runs_test",
-    "q_session_length_dist",
-    "q_mv_rollup_answer",
-    "q_join_lateral_topk",
-    "q_link_entities",
-    "q_link_survivorship",
-    "q_quality_freshness",
-    "q_quality_psi",
-    "q_anomaly_seasonal",
-    "q_quality_sequence",
-    "q_quality_benford",
-    "q_quality_profile",
-    "q_quality_temporal",
-    "q_quality_reconcile",
-    "q_sink_compaction",
-    "q_domain_fhir_bundle",
-    # r6 re-bank: oldest 4 fill the window
-    "q_source_json_dlq",
-    "q_sink_backfill",
-    "q_audit_file_layout",
-    "q_source_textlines",
+    "q_dedup_cosine",
+    # oldest green rows first (scripts/rotation_candidates.py --age):
+    # 34 r6 names, then the 7 oldest r8 names
+    "q_scan_zorder",
+    "q_scan_zorder_incremental",
+    "q_scan_indexed",
+    "q_string_collation",
+    "q_date_timezones",
+    "q_ml_logreg_train",
+    "q_text_keywords",
+    "q_text_pmi",
+    "q_text_perplexity_filter",
+    "q_text_zipf",
+    "q_text_heavyhitters",
+    "q_text_search_and",
+    "q_text_vocab_drift",
+    "q_text_novelty",
+    "q_text_source_diversity",
+    "q_text_hapax",
+    "q_sample_negatives",
+    "q_sample_budget",
+    "q_sample_estimate",
+    "q_split_grouped",
+    "q_sample_temp_sweep",
+    "q_pipeline_interleave",
+    "q_embed_pq",
+    "q_cluster_geometry",
+    "q_embed_audit",
+    "q_text_source_overlap",
+    "q_dedup_burden_matrix",
+    "q_pipeline_incremental_dedup",
+    "q_pipeline_fates",
+    "q_split_leakage",
+    "q_corpus_release_gate",
+    "q_stream_ingest_dedup",
+    "q_stream_stream_left",
+    "q_stream_mv_refresh",
+    "q_agg_approx_quantile",
+    "q_agg_cms",
+    "q_agg_hbos",
+    "q_ab_welch",
+    "q_ab_mannwhitney",
+    "q_ab_bootstrap",
+    "q_ts_decompose",
 )
 
 # The external checker verifies exactly the first 50 load_all() entries;

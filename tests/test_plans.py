@@ -599,11 +599,15 @@ def test_runtime_bloom_filter_injection(spark, sf_dir):
         spark.conf.set(bc, old_bc)
 
 
-def test_exact_median_never_global_sorts(spark, sf_dir):
-    """A27: the two-pass median must not contain a global Sort over the
-    data — only window sorts inside hash partitions (Sort nodes under
-    an Exchange hashpartitioning, never rangepartitioning)."""
-    p = plan(spark, sf_dir, "q_agg_exact_median")
+@pytest.mark.parametrize("name", [
+    "q_agg_exact_median", "q_agg_exact_quantiles", "q_agg_cvar",
+    "q_quality_iqr", "q_agg_trimmed_mean"])
+def test_exact_median_never_global_sorts(spark, sf_dir, name):
+    """A27/A30: every exact rank query built on ``binned_ranks`` must
+    not contain a global Sort over the data — only window sorts inside
+    hash partitions (Sort nodes under an Exchange hashpartitioning,
+    never rangepartitioning)."""
+    p = plan(spark, sf_dir, name)
     assert "rangepartitioning" not in p.lower()
     # per-group stats and the target-bin relation ride broadcasts
     assert "BroadcastExchange" in p
@@ -702,16 +706,6 @@ def test_pagerank_iteration_plan_shape(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in p
     assert "InMemoryTableScan" in p
     assert "rangepartitioning" not in p.lower()
-
-
-def test_exact_quantiles_never_global_sorts(spark, sf_dir):
-    """A30: the two-pass quantile vector must locate bins via the
-    broadcast stats relation and rank only inside hash partitions —
-    no rangepartitioning anywhere (the whole point vs sort-based
-    quantiles)."""
-    p = plan(spark, sf_dir, "q_agg_exact_quantiles")
-    assert "rangepartitioning" not in p.lower()
-    assert "BroadcastExchange" in p
 
 
 def test_attribution_single_user_keyed_join(spark, sf_dir):

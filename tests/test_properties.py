@@ -481,38 +481,35 @@ def test_pagerank_mass_and_determinism(spark, sf_dir):
 
 
 def test_release_graph_caches_scoped(spark, sf_dir):
-    # release_graph_caches() frees exactly the relations the graph
-    # module persisted: an unrelated persisted DataFrame must survive
-    # (the property clearCache() could not give), results must be
-    # identical after a release-forced rebuild, and a second release
-    # finds nothing left.
+    # release_caches() frees exactly the relations the engine
+    # persisted (here the graph module's): an unrelated persisted
+    # DataFrame must survive (the property clearCache() could not give),
+    # results must be identical after a release-forced rebuild, and a
+    # second release finds nothing left.
     from pyspark.sql import functions as F
 
     from sigma_rx7_spark import registry
-    from sigma_rx7_spark.operators.graph import (
-        _GRAPH_CACHES,
-        release_graph_caches,
-    )
+    from sigma_rx7_spark.caches import _TRACKED, release_caches
 
-    release_graph_caches()  # start from a clean slate
+    release_caches()  # start from a clean slate
     unrelated = spark.range(100).select(
         (F.col("id") * 2).alias("v")).persist()
     assert unrelated.count() == 100  # materialize the cache entry
 
     q = registry.load_all()["q_graph_pagerank"]
     rows = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
-    assert len(_GRAPH_CACHES) > 0
-    released = release_graph_caches()
+    assert len(_TRACKED) > 0
+    released = release_caches()
     assert released >= 3  # edges + nodes + outdeg at minimum
-    assert not _GRAPH_CACHES
+    assert not _TRACKED
     # scoped: the unrelated entry was not evicted
     assert unrelated.storageLevel.useMemory
     # double release is a safe no-op
-    assert release_graph_caches() == 0
+    assert release_caches() == 0
     # rebuild after release is bit-identical
     again = sorted(map(tuple, q.fn(spark, sf_dir).collect()))
     assert rows == again
-    release_graph_caches()
+    release_caches()
     unrelated.unpersist()
 
 

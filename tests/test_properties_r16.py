@@ -165,22 +165,22 @@ def test_bitset_cluster_pairs_equal_join_pairs(spark, sf_dir):
 
 
 def test_release_dedup_caches_is_scoped(spark, sf_dir):
-    # ADVICE r15: dedup persists route through a tracked registry with
+    # ADVICE r15: dedup persists route through the tracked registry with
     # a scoped release — releasing must unpersist what the module
     # cached and must NOT touch unrelated persisted relations.
     from pyspark.sql import functions as F
 
-    from sigma_rx7_spark.llm import dedup as D
+    from sigma_rx7_spark import caches
 
     other = spark.range(10).select(F.col("id").alias("x")).persist()
     other.count()
-    n_before = len(D._DEDUP_CACHES)
+    n_before = len(caches._TRACKED)
     ALL["q_dedup_near"].fn(spark, sf_dir).write.mode("overwrite") \
         .format("noop").save()
-    n_tracked = len(D._DEDUP_CACHES)
+    n_tracked = len(caches._TRACKED)
     assert n_tracked > n_before
-    released = D.release_dedup_caches()
+    released = caches.release_caches()
     assert released == n_tracked
-    assert not D._DEDUP_CACHES
+    assert not caches._TRACKED
     assert other.storageLevel.useMemory  # unrelated cache untouched
     other.unpersist()
